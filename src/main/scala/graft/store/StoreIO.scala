@@ -103,6 +103,11 @@ object StorePath {
     }
 }
 
+/** One listed file: its path, byte length and modification time
+  * (epoch millis). */
+final case class StoreFileStatus(path: StorePath, length: Long,
+    modificationTime: Long)
+
 /** Mirror of the `java.nio.file.Paths.get(first, more*)` construction
   * the protocol uses. */
 object StorePaths {
@@ -126,6 +131,7 @@ private[store] trait StoreBackend {
   def deleteIfExists(p: StorePath): Boolean
   def createDirectories(p: StorePath): Unit
   def list(p: StorePath): Seq[StorePath]
+  def listFiles(p: StorePath): Seq[StoreFileStatus]
   def getLastModifiedTime(p: StorePath): FileTime
   def setLastModifiedTime(p: StorePath, t: FileTime): Unit
   def deleteTree(p: StorePath): Unit
@@ -186,6 +192,20 @@ private[store] object LocalStoreIO extends StoreBackend {
   def list(p: StorePath): Seq[StorePath] = {
     val s = java.nio.file.Files.list(nio(p))
     try s.iterator().asScala.map(c => StorePath(c.toString)).toList
+    finally s.close()
+  }
+  def listFiles(p: StorePath): Seq[StoreFileStatus] = {
+    val s = java.nio.file.Files.list(nio(p))
+    try s.iterator().asScala.flatMap { c =>
+      // a child removed between the listing and its attribute read
+      // (a concurrent vacuum / erasure swap) is simply not listed
+      val attrs =
+        try Some(java.nio.file.Files.readAttributes(c,
+          classOf[java.nio.file.attribute.BasicFileAttributes]))
+        catch { case _: java.nio.file.NoSuchFileException => None }
+      attrs.filter(_.isRegularFile).map(a => StoreFileStatus(
+        StorePath(c.toString), a.size, a.lastModifiedTime.toMillis))
+    }.toList
     finally s.close()
   }
   def getLastModifiedTime(p: StorePath): FileTime =
@@ -326,6 +346,11 @@ private[store] object HadoopStoreIO extends StoreBackend {
   def list(p: StorePath): Seq[StorePath] =
     try fs(p).listStatus(h(p)).toSeq.map(st => StorePath(st.getPath.toString))
     catch { case _: java.io.FileNotFoundException => throw noSuchFile(p) }
+  def listFiles(p: StorePath): Seq[StoreFileStatus] =
+    try fs(p).listStatus(h(p)).toSeq.filter(_.isFile).map(st =>
+      StoreFileStatus(StorePath(st.getPath.toString), st.getLen,
+        st.getModificationTime))
+    catch { case _: java.io.FileNotFoundException => throw noSuchFile(p) }
 
   def getLastModifiedTime(p: StorePath): FileTime =
     try FileTime.fromMillis(fs(p).getFileStatus(h(p)).getModificationTime)
@@ -417,6 +442,13 @@ object StoreFiles {
     * O(data)). */
   def list(p: StorePath): java.util.stream.Stream[StorePath] =
     io(p).list(p).asJavaSeqStream
+
+  /** The regular files directly under `p` with their sizes and mtimes —
+    * what a scan's file index needs. The Hadoop backend gets them from
+    * the one `listStatus` call; locally each child costs one attribute
+    * read. Throws [[java.nio.file.NoSuchFileException]] for a missing
+    * `p`, like [[list]]. */
+  def listFiles(p: StorePath): Seq[StoreFileStatus] = io(p).listFiles(p)
 
   def getLastModifiedTime(p: StorePath): FileTime = io(p).getLastModifiedTime(p)
   def setLastModifiedTime(p: StorePath, t: FileTime): StorePath = {

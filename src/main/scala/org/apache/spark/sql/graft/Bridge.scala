@@ -14,6 +14,13 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `st` with every field, nested ones included, nullable — the form
+    * Spark's own file sources read with, so a value a file lacks reads
+    * as NULL instead of a zeroed primitive (`StructType.asNullable` is
+    * `private[spark]`). */
+  def asNullable(st: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = st.asNullable
+
   /** Re-wrap a computed batch frame as a STREAMING DataFrame — what a
     * V1 [[org.apache.spark.sql.execution.streaming.Source]]'s
     * `getBatch` must return (MicroBatchExecution asserts

@@ -1990,17 +1990,21 @@ class SinkSpec extends SparkTestBase {
     MergeSink.applyBucketedBatch(
       Seq((coldKey, "upsert", 1L, "cold", 1L)).toDF("k", "op", "ver", "name", "v"),
       0L, store, "k", "op", "ver", vcols, nBuckets = 4)
-    // hot bucket: one commit whose rows span several write tasks →
-    // several small files inside ONE bucket dir (AQE's tiny-shuffle
-    // coalescing would fold them back into one task — switch it off
-    // for the setup write only)
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try MergeSink.applyBucketedBatch(
-      hotKeys.map(k => (k, "upsert", 2L, s"h$k", k)).toDF("k", "op", "ver", "name", "v")
-        .repartition(4),
+    // hot bucket: one commit, then its bucket dir re-laid as four small
+    // files of the same rows — the shape an unclustered writer leaves
+    // (a commit writes one file per bucket, so it cannot fragment one)
+    MergeSink.applyBucketedBatch(
+      hotKeys.map(k => (k, "upsert", 2L, s"h$k", k)).toDF("k", "op", "ver", "name", "v"),
       1L, store, "k", "op", "ver", vcols, nBuckets = 4)
-    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    locally {
+      val hotDir = java.nio.file.Paths.get(store, "v1", s"_bucket=$hotBucket")
+      val split = s"$dir/hot_split"
+      spark.read.parquet(hotDir.toString).repartition(4).write.parquet(split)
+      Files.list(hotDir).iterator().asScala.toList.foreach(Files.delete(_))
+      Files.list(java.nio.file.Paths.get(split)).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .foreach(f => Files.move(f, hotDir.resolve(f.getFileName)))
+    }
     val statsBefore = MergeSink.storeStats(spark, store).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(statsBefore(hotBucket)._2 > 2,

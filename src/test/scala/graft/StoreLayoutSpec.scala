@@ -31,6 +31,39 @@ class StoreLayoutSpec extends SparkTestBase {
     spark.range(1).select(pmod(xxhash64(lit(k)), lit(n.toLong)))
       .head().getLong(0)
 
+  /** Spark's parallel partition discovery — what a directory-listing
+    * scan of a version dir submits above 32 paths — counted while
+    * `body` runs: jobs whose description starts with "Listing leaf
+    * files" and names a path under `under`. A marker job submitted
+    * after `body` drains the listener queue (events arrive in order). */
+  private def listingJobs(under: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = s"listing-probe-${System.nanoTime()}"
+    val listings = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        if (d.startsWith("Listing leaf files") && d.contains(under))
+          listings.incrementAndGet()
+        if (d == marker) drained.countDown()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener queue did not drain")
+    } finally sc.removeSparkListener(l)
+    listings.get
+  }
+
   private def keysAt(store: String, v: Long): Set[Long] =
     MergeSink.bucketedSnapshotAt(spark, store, v)
       .select("k").collect().map(_.getLong(0)).toSet
@@ -111,5 +144,83 @@ class StoreLayoutSpec extends SparkTestBase {
       put(store, Seq((5L, "upsert", 3L, "e", 50L)), 2L, nBuckets = 8)
     }
     assert(e.getMessage.contains("bucketed into 4"), e.getMessage)
+  }
+
+  /** A 64-bucket store whose buckets span two owner versions (v0 wrote
+    * every bucket, v1 rewrote buckets 0–23), plus the bucket of each key
+    * of 1..2000. */
+  private def twoOwnerStore(name: String, commit: (String, Seq[Long], Long, Long) => Unit)
+      : (String, Map[Long, Long]) = {
+    val store = NioFiles.createTempDirectory(name).toString + "/store"
+    val bucket = spark.range(1, 2001)
+      .select(col("id"), pmod(xxhash64(col("id")), lit(64L)))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    commit(store, (1L to 2000L), 0L, 1L)
+    commit(store, (1L to 2000L).filter(bucket(_) < 24), 1L, 2L)
+    val owners = MergeSink.storeStats(spark, store).collect()
+      .map(_.getLong(1)).toSet
+    assert(owners == Set(0L, 1L), s"setup: two owner versions, got $owners")
+    (store, bucket)
+  }
+
+  private def upserts(keys: Seq[Long], ver: Long) =
+    keys.map(k => (k, "upsert", ver, s"n$k.$ver", k * ver)).toDF("k", "op", "ver", "name", "v")
+
+  Seq("applyBucketedBatch", "applyBucketedBatchOcc").foreach { path =>
+    test(s"$path: a commit touching >32 buckets over two owner versions lists on the driver and writes one file per touched bucket") {
+      val commit: (String, Seq[Long], Long, Long) => Unit =
+        (store, keys, batch, ver) =>
+          if (path == "applyBucketedBatch")
+            MergeSink.applyBucketedBatch(upserts(keys, ver), batch, store,
+              "k", "op", "ver", vcols, nBuckets = 64)
+          else
+            MergeSink.applyBucketedBatchOcc(upserts(keys, ver), batch, store,
+              "k", "op", "ver", vcols, nBuckets = 64)
+      val (store, bucket) = twoOwnerStore(s"graft_listing_$path", commit)
+      // 40 buckets: 0–23 owned by v1, 24–39 by v0
+      val keys = (1L to 2000L).filter(bucket(_) < 40)
+      val touched = keys.map(bucket).toSet
+      assert(touched.size == 40)
+      // AQE off for this commit: test-sized data would otherwise coalesce
+      // the merge to ONE task, which writes one file per bucket whether
+      // or not the write is clustered; off, the merge runs 4 tasks
+      val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val jobs =
+        try listingJobs(store) { commit(store, keys, 2L, 3L) }
+        finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      assert(jobs == 0, s"the commit submitted $jobs listing job(s)")
+      // the detector is live: a directory scan of the same store lists
+      // its 64 bucket dirs as a job
+      assert(listingJobs(store) { spark.read.parquet(s"$store/v0") } >= 1)
+      // every surviving touched bucket is ONE file under the new version
+      val files = touched.toSeq.sorted.map { b =>
+        val d = NioPaths.get(store, "v2", s"_bucket=$b")
+        b -> NioFiles.list(d).toArray.map(_.toString)
+          .count(_.endsWith(".parquet"))
+      }
+      assert(files.forall(_._2 == 1), s"files per touched bucket: $files")
+      // content: the touched keys carry ver 3's values, the rest ver 1's
+      val got = MergeSink.currentBucketedSnapshot(spark, store).get
+        .select("k", "v").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = (1L to 2000L).map(k => k -> k * (if (bucket(k) < 40) 3L else 1L)).toMap
+      assert(got == want)
+    }
+  }
+
+  test("planning a bucket-pruned graft point read submits no listing job") {
+    val commit: (String, Seq[Long], Long, Long) => Unit =
+      (store, keys, batch, ver) =>
+        MergeSink.applyBucketedBatch(upserts(keys, ver), batch, store,
+          "k", "op", "ver", vcols, nBuckets = 64)
+    val (store, _) = twoOwnerStore("graft_listing_read", commit)
+    var plan: String = null
+    val jobs = listingJobs(store) {
+      plan = spark.read.format("graft").load(store).filter(col("k") === 7L)
+        .queryExecution.executedPlan.toString
+    }
+    assert(jobs == 0, s"planning submitted $jobs listing job(s):\n$plan")
+    assert(spark.read.format("graft").load(store).filter(col("k") === 7L)
+      .select("name").collect().map(_.getString(0)).toSeq == Seq("n7.1"))
   }
 }
